@@ -13,7 +13,7 @@ expressions cannot express the semantics.
 
 Design stance (SURVEY.md §7): thin, well-tested PySpark library.  All
 operators are designed for a 1000-executor / 100 TB deployment even
-though tests run on local[32]:
+though tests run on local[4] (tests/conftest.py):
 
 * expressions stay JVM-side (whole-stage codegen) wherever possible;
 * small dimension inputs are broadcast;

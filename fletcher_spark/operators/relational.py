@@ -4,15 +4,12 @@ Reference parity (SURVEY.md §2.8): fletcher has **no** joins, windows,
 sorts or set operations of its own; pandas supplies them through
 ``factorize``/``take`` (/root/reference/fletcher/base.py:1116,1528).
 On Spark these are native Catalyst operators; this module adds the
-scale-conscious wrappers (broadcast decisions, top-k without a full
-sort, as-of join without an O(n²) nested loop, sessionization without
-a global sort).
+scale-conscious wrappers (broadcast decisions, as-of join without an
+O(n²) nested loop, sessionization without a global sort).
 
 Scale notes:
 
 * ``broadcast_right`` joins avoid shuffling the fact side entirely.
-* ``topk`` compiles to ``TakeOrderedAndProject`` — a per-partition
-  heap + driver merge, never a global sort of 100 TB.
 * ``asof_join`` uses the union+window technique: one shuffle on the
   ``by`` key, no range cross-product.  This is the standard way to do
   point-in-time joins on Spark (same idea as Flink's event-time join).
@@ -21,8 +18,6 @@ Scale notes:
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -49,23 +44,6 @@ def semi_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
 def anti_join(left: DataFrame, right: DataFrame, on) -> DataFrame:
     """NOT EXISTS semantics."""
     return left.join(right, on, "left_anti")
-
-
-def topk(df: DataFrame, order: Sequence[Column], k: int) -> DataFrame:
-    """Top-k by ``order`` — compiles to TakeOrderedAndProject (bounded
-    memory per partition; no global sort).  Include a unique tiebreaker
-    in ``order`` for deterministic results."""
-    return df.orderBy(*order).limit(k)
-
-
-def topk_per_group(
-    df: DataFrame, group: Sequence[str], order: Sequence[Column], k: int,
-    rank_col: str = "rn",
-) -> DataFrame:
-    """Per-group top-k via row_number over a partitioned window (shuffle
-    on the group key only — safe at scale; never a global orderBy)."""
-    w = Window.partitionBy(*group).orderBy(*order)
-    return df.withColumn(rank_col, F.row_number().over(w)).filter(F.col(rank_col) <= k)
 
 
 def asof_join(

@@ -24,62 +24,40 @@ session.py).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
-    "word_shingles",
     "shingle_frame",
-    "minhash_signature",
-    "lsh_band_keys",
+    "minhash_signature_df",
     "lsh_band_keys_sql",
-    "lsh_band_keys_adaptive",
     "lsh_band_keys_adaptive_sql",
     "lsh_rpb_case_sql",
     "candidate_pairs",
     "verify_jaccard",
-    "simhash64",
-    "simhash_chunks",
-    "simhash_chunks_packed",
+    "simhash_df",
+    "simhash_df_128",
     "simhash_chunks_packed_sql",
     "simhash_chunks_packed_128_sql",
 ]
 
 
-def word_shingles(text: Column | str, k: int = 3) -> Column:
-    """Distinct word ``k``-shingles of a whitespace-tokenized text column.
-
-    ``transform`` over an index sequence + ``slice``.  Shorter-than-``k``
-    docs yield a single whole-doc shingle so they can still hash (guard
-    avoids ``sequence(1, negative)``).
-
-    PERF: when ``text`` is the raw string, the inlined ``split`` is
-    re-evaluated per slice inside the (interpreted) transform lambda —
-    measured 3× slower than splitting once.  Prefer
-    :func:`shingle_frame`, which materializes the token array in its
-    own projection first; this Column form is kept for composition and
-    for callers that already pass a token array.
-    """
-    c = F.col(text) if isinstance(text, str) else text
-    toks = F.split(c, " ", -1)
-    n = F.size(toks)
-    shingled = F.transform(
-        F.sequence(F.lit(1), n - (k - 1)),
-        lambda i: F.array_join(F.slice(toks, i, k), " "),
-    )
-    return F.array_distinct(F.when(n >= k, shingled).otherwise(F.array(c)))
-
-
 def shingle_frame(
     df: DataFrame, text_col: str = "text", k: int = 3, id_col: str = "doc_id"
 ) -> DataFrame:
-    """(id, shingles) frame with the token split MATERIALIZED in its own
-    projection before the slice lambda touches it — the projection
-    boundary stops the interpreted transform from re-running the split
-    per shingle (3× on the 5k-doc corpus; the factor grows with doc
-    length since the re-eval is per slice position).  Same output as
-    ``select(id, word_shingles(text, k))``, pinned by the unchanged
-    oracles of every dedup query."""
+    """(id, shingles) frame: the distinct word ``k``-shingles of each
+    text, tokenized on single spaces (repeated spaces yield empty
+    tokens, kept as-is).  ``transform`` over an index sequence +
+    ``slice``; docs shorter than ``k`` tokens yield a single whole-doc
+    shingle so they can still hash (the guard avoids
+    ``sequence(1, negative)``).
+
+    The token split is MATERIALIZED in its own projection before the
+    slice lambda touches it — the projection boundary stops the
+    interpreted transform from re-running the split per shingle (3× on
+    the 5k-doc corpus; the factor grows with doc length since the
+    re-eval is per slice position).  Pinned against a pure-Python
+    shingler in tests/test_dedup_property.py."""
     t = df.select(id_col, F.split(F.col(text_col), " ", -1).alias("__toks"))
     toks = F.col("__toks")
     n = F.size(toks)
@@ -93,79 +71,19 @@ def shingle_frame(
     return t.select(id_col, sh.alias("shingles"))
 
 
-#: modulus for the two-base-hash MinHash family (large prime < 2^61;
-#: v1 + j*v2 stays < 2^63 for v1, v2 < 2^56 and j ≤ ~60)
-_MINHASH_P = 2305843009213693951
-
-
-def minhash_signature(shingles: Column, n_hashes: int = 12) -> Column:
-    """MinHash signature via the two-base-hash family:
-    ``h_j(s) = (v1 + j*v2) mod p`` with v1/v2 = two 56-bit halves of
-    one md5 — an ``n_hashes``-element array<long>.
-
-    ONE md5 per shingle (not per hash): the md5 is materialized into a
-    struct array first because Catalyst does not CSE inside
-    higher-order-function lambdas — deriving all hashes from the struct
-    makes the signature ~n_hashes× cheaper than an md5-per-family-member
-    formulation.  Map-only, no shuffle, no UDF.
-    P[minhash_j(A) == minhash_j(B)] = J(A, B), the standard estimator.
-    """
-    halves = F.transform(
-        shingles,
-        lambda s: F.struct(
-            F.conv(F.substring(F.md5(s), 1, 14), 16, 10).cast("long").alias("v1"),
-            F.conv(F.substring(F.md5(s), 15, 14), 16, 10).cast("long").alias("v2"),
-        ),
-    )
-
-    # close over j via a factory, NOT a default argument: a two-parameter
-    # lambda makes F.transform pass the ARRAY INDEX as the second
-    # argument (the (element, index) form), silently overriding the
-    # default — which collapsed all n_hashes family members to the same
-    # index-keyed min (caught r12 by the differential test against
-    # minhash_signature_df; no oracled query ever called this form)
-    def _member(j: int):
-        return lambda h: (h["v1"] + j * h["v2"]) % _MINHASH_P
-
-    return F.array(
-        *[F.array_min(F.transform(halves, _member(j))) for j in range(n_hashes)]
-    )
-
-
-def lsh_band_keys(sig: Column, bands: int = 4, rows: int = 3) -> Column:
-    """Banded LSH keys: split the signature into ``bands`` groups of
-    ``rows`` and hash each group — array of ``(band int, key string)``
-    structs where key = md5 of the band's '|'-joined rows.
+def lsh_band_keys_sql(sig_sql: str, bands: int = 4, rows: int = 3) -> str:
+    """Banded LSH keys as SQL text: split the signature into ``bands``
+    groups of ``rows`` and hash each group — array of ``(band int, key
+    string)`` structs where key = md5 of the band's '|'-joined rows.
 
     Two docs are candidates iff they share a key in ≥1 band:
     P[candidate] = 1 - (1 - J^rows)^bands — the (4,3) default passes
-    J≥0.8 with p>0.93 and rejects J≤0.3 with p>0.89.
-    """
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.element_at(sig, b * rows + r + 1).cast("string")
-                            for r in range(rows)
-                        ],
-                    )
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
+    J≥0.8 with p>0.93 and rejects J≤0.3 with p>0.89.  ``concat_ws``
+    skips NULLs, so a NULL signature keys every band as ``md5('')``.
 
-
-def lsh_band_keys_sql(sig_sql: str, bands: int = 4, rows: int = 3) -> str:
-    """:func:`lsh_band_keys` as SQL text — the same (band, key) struct
-    array via ONE parser call (the Column form costs a py4j round-trip
-    per node: ~0.25 s per construction for the adaptive three-rung
-    CASE, measured r13).  Differentially pinned value-identical in
-    tests/test_vector_sql_twins.py."""
+    Rendered as text for ONE parser call: the Column-API form cost a
+    py4j round-trip per node (~0.25 s per construction for the
+    adaptive three-rung CASE, measured r13)."""
     return "array({})".format(
         ",".join(
             "named_struct('band', {b}, 'key', md5(concat_ws('|', {cols})))".format(
@@ -181,8 +99,12 @@ def lsh_band_keys_sql(sig_sql: str, bands: int = 4, rows: int = 3) -> str:
 
 
 def lsh_band_keys_adaptive_sql(sig_sql: str, n_sql: str) -> str:
-    """:func:`lsh_band_keys_adaptive` as SQL text — the same
-    ladder-threshold CASE over the same branch expressions."""
+    """Corpus-size-adaptive band layout (VERDICT r11 ask #2) as SQL
+    text: pick (bands, rows) from ``LSH_BAND_LADDER`` by integer
+    thresholds on ``n_sql`` (a broadcast one-row count, constant across
+    rows).  CASE evaluates lazily, so each row computes only the chosen
+    layout's band md5s; all branches share the already-computed 12-wide
+    ``sig``."""
     whens = " ".join(
         f"WHEN {n_sql} <= {max_n} THEN {lsh_band_keys_sql(sig_sql, bands, rows)}"
         for max_n, bands, rows in LSH_BAND_LADDER
@@ -236,25 +158,6 @@ for _entry in LSH_BAND_LADDER + ((0, *LSH_BAND_FLOOR),):
 del _entry, _bands, _rows
 
 
-def lsh_band_keys_adaptive(sig: Column, n_docs: Column) -> Column:
-    """Corpus-size-adaptive band layout (VERDICT r11 ask #2): pick
-    (bands, rows) from ``LSH_BAND_LADDER`` by integer thresholds on
-    ``n_docs`` (a broadcast one-row count, constant across rows).  CASE
-    evaluates lazily, so each row computes only the chosen layout's
-    band md5s; all branches share the already-computed 12-wide ``sig``.
-    """
-    expr: Column | None = None
-    for max_n, bands, rows in LSH_BAND_LADDER:
-        branch = lsh_band_keys(sig, bands, rows)
-        expr = (
-            F.when(n_docs <= max_n, branch)
-            if expr is None
-            else expr.when(n_docs <= max_n, branch)
-        )
-    assert expr is not None
-    return expr.otherwise(lsh_band_keys(sig, *LSH_BAND_FLOOR))
-
-
 def lsh_rpb_case_sql(n_expr: str) -> str:
     """Rows-per-band CASE over a corpus-count expression — ONE text
     evaluated identically by Spark SQL and DuckDB (integer thresholds
@@ -267,25 +170,31 @@ def lsh_rpb_case_sql(n_expr: str) -> str:
     return f"(CASE {whens} ELSE {LSH_BAND_FLOOR[1]} END)"
 
 
-def _halves_cols(shingle: Column) -> tuple[Column, Column]:
-    """Two 56-bit integer hashes from one md5 of a shingle (codegen;
-    the md5 is CSE'd across the two conv calls inside a Project)."""
-    h = F.md5(shingle)
-    v1 = F.conv(F.substring(h, 1, 14), 16, 10).cast("long")
-    v2 = F.conv(F.substring(h, 15, 14), 16, 10).cast("long")
-    return v1, v2
+#: modulus for the two-base-hash MinHash family (large prime < 2^61;
+#: v1 + j*v2 stays < 2^63 for v1, v2 < 2^56 and j ≤ ~60)
+_MINHASH_P = 2305843009213693951
 
 
 def minhash_signature_df(
     df: DataFrame, id_col: str = "doc_id", shingle_col: str = "shingles", n_hashes: int = 12
 ) -> DataFrame:
-    """MinHash as explode → codegen hash projection → grouped min.
+    """MinHash signature via the two-base-hash family:
+    ``h_j(s) = (v1 + j*v2) mod p`` with v1/v2 = two 56-bit halves of
+    one md5 — an ``n_hashes``-element array<long> per doc.
+    P[minhash_j(A) == minhash_j(B)] = J(A, B), the standard estimator.
 
-    The whole-stage-codegen formulation of :func:`minhash_signature`
-    (higher-order functions are CodegenFallback — interpreted — so the
-    in-array version pays ~10× per element).  The shuffle this
-    introduces is tiny: partial aggregation combines map-side, so only
-    |docs| × n_hashes longs cross the wire.  Output: (id, sig).
+    Explode → codegen hash projection → grouped min.  Whole-stage
+    codegen matters: higher-order functions are CodegenFallback
+    (interpreted), so an in-array ``transform`` form pays ~10× per
+    element.  ONE md5 per shingle, not per hash: the n_hashes affine
+    columns share the md5 inside one codegen projection, where it is
+    common-subexpression-eliminated — Catalyst does not CSE inside
+    higher-order-function lambdas, so an in-array form would need the
+    md5 materialized into a struct array first to avoid an
+    md5-per-family-member cost.  The shuffle this introduces is tiny:
+    partial aggregation combines map-side, so only |docs| × n_hashes
+    longs cross the wire.  Output: (id, sig); docs with an empty or
+    NULL shingle array produce no row.
     """
     ex = df.select(id_col, F.explode(shingle_col).alias("t"))
     # the n_hashes affine-hash columns as ONE selectExpr batch (the
@@ -320,7 +229,13 @@ def simhash_df(
     sums ``((w >> k) & 1) << 16j`` lanes — bit-exact as long as no doc
     has ≥ 32768 shingles (lane carry), far above any real document.
     Sign rule: ±1 sum > 0  ⟺  2·popcount > n_shingles.
-    Output: (id, bv array<long> of 64 bits, MSB-first).
+
+    Repeated shingles weight their bits by multiplicity — the standard
+    Charikar semantics.  Callers wanting set semantics pass distinct
+    arrays, as :func:`shingle_frame` emits.  Bits come from the first
+    two 32-bit words of each shingle's md5, materialized ONCE per
+    shingle in their own projection (see below).
+    Output: (id, sig packed long, bv array<long> of 64 bits, MSB-first).
     """
     ex = df.select(id_col, F.explode(shingle_col).alias("t"))
     # materialize the halves in their own projection: they are re-read
@@ -372,10 +287,11 @@ def simhash_df(
 def simhash_df_128(
     df: DataFrame, id_col: str = "doc_id", shingle_col: str = "shingles"
 ) -> DataFrame:
-    """128-bit SimHash — the corpus-scale widening :func:`simhash_chunks`
-    scopes: same explode → packed-lane → grouped-sum shape as
-    :func:`simhash_df`, but consuming the FULL md5 (4×32-bit words) so
-    chunk keys can be 16-bit (65k buckets) instead of 8-bit (256) —
+    """128-bit SimHash — the corpus-scale widening
+    :func:`simhash_chunks_packed_sql` scopes: same explode →
+    packed-lane → grouped-sum shape as :func:`simhash_df`, but
+    consuming the FULL md5 (4×32-bit words) so chunk keys can be
+    16-bit (65k buckets) instead of 8-bit (256) —
     at ~10⁹ docs, 256 buckets per chunk would put ~4M docs in every
     bucket and the candidate join would degenerate toward all-pairs;
     65k buckets keep per-bucket membership ~1000× smaller.
@@ -421,34 +337,6 @@ def simhash_df_128(
         " + ".join(f"shiftleft(if({bit(i)}, 1L, 0L), {127 - i})" for i in range(64, 128))
     )
     return summed.select(id_col, sig1.alias("sig1"), sig2.alias("sig2"))
-
-
-def simhash_chunks_packed_128(
-    sig1: Column, sig2: Column, n_chunks: int = 8
-) -> Column:
-    """:func:`simhash_chunks_packed` over the two-word 128-bit
-    signature: ``n_chunks`` equal chunks of ``128 / n_chunks`` bits,
-    chunk k sliced out of sig1 (k < n_chunks/2) or sig2 with two
-    integer ops.  Pigeonhole: Hamming ≤ n_chunks − 1 ⇒ ≥1 shared
-    chunk; beyond that the bucket join is probabilistic (the planted
-    near-dup recall is pinned in tests/test_pipeline.py)."""
-    w = 128 // n_chunks
-    assert 64 % w == 0, "chunk width must divide the 64-bit words"
-    per_word = 64 // w
-    mask = (1 << w) - 1
-    out = []
-    for k in range(n_chunks):
-        word = sig1 if k < per_word else sig2
-        kk = k % per_word
-        out.append(
-            F.struct(
-                F.lit(k).alias("band"),
-                F.shiftright(word, 64 - (kk + 1) * w)
-                .bitwiseAND(F.lit(mask))
-                .alias("key"),
-            )
-        )
-    return F.array(*out)
 
 
 def candidate_pairs(
@@ -543,112 +431,21 @@ def verify_jaccard(
     )
 
 
-# --------------------------------------------------------------------------
-# SimHash
-# --------------------------------------------------------------------------
-
-
-def _bits_from_halves(h: Column) -> Column:
-    """±1 contributions for the 64 bits of a (v1, v2) 32-bit-halves
-    struct (MSB-first).  Bit ``i`` is extracted arithmetically
-    (``div 2^k % 2``) because ``shiftright`` needs a literal shift
-    amount; the divisors come from a literal array so the inner lambda
-    is two integer ops + a lookup."""
-    div = F.array(*[F.lit(2 ** (31 - k)) for k in range(32)])
-
-    def bit(v: Column, i: Column) -> Column:
-        return (v / F.element_at(div, i + 1)).cast("long") % 2
-
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(63)),
-        lambda i: (
-            F.when(i < 32, bit(h["v1"], i)).otherwise(bit(h["v2"], i - 32)) * 2 - 1
-        ).cast("long"),
-    )
-
-
-def simhash64(tokens: Column) -> Column:
-    """64-bit SimHash over a token array as an array<long> of 64 bits
-    (MSB-first, 1 where the summed ±1 contributions are positive).
-
-    Repeated tokens weight their bits by multiplicity — the standard
-    Charikar semantics and bit-identical to :func:`simhash_df` on ALL
-    inputs (unified r13; until then this form ``array_distinct``-ed its
-    input, so the two "equivalent" APIs silently diverged on raw
-    non-distinct token arrays — tests/test_dedup_property.py pins the
-    twins unconditionally now).  Callers wanting set semantics pass
-    ``F.array_distinct(tokens)`` explicitly, as ``shingle_frame`` does.
-
-    The md5 of each token is materialized ONCE into a (v1, v2)
-    halves-struct array before bit expansion — Catalyst does not CSE
-    inside higher-order-function lambdas, so inlining the md5 into the
-    per-bit lambda would recompute it 64× per token (measured ~20×
-    slower at sf0.1).  ``aggregate`` + ``zip_with`` then keeps the whole
-    reduction inside one codegen stage per row — no explode, no
-    shuffle, no Python.
-    """
-    halves = F.transform(
-        tokens,
-        lambda t: F.struct(
-            F.conv(F.substring(F.md5(t), 1, 8), 16, 10).cast("long").alias("v1"),
-            F.conv(F.substring(F.md5(t), 9, 8), 16, 10).cast("long").alias("v2"),
-        ),
-    )
-    summed = F.aggregate(
-        halves,
-        F.expr("array_repeat(0L, 64)"),
-        lambda acc, h: F.zip_with(acc, _bits_from_halves(h), lambda x, y: x + y),
-    )
-    return F.transform(summed, lambda s: F.when(s > 0, F.lit(1)).otherwise(F.lit(0)).cast("long"))
-
-
-def simhash_chunks(bits: Column, n_chunks: int = 8) -> Column:
-    """Split a 64-bit SimHash into ``n_chunks`` equal-width bucket keys.
+def simhash_chunks_packed_sql(sig_sql: str, n_chunks: int = 8) -> str:
+    """Split a packed 64-bit SimHash into ``n_chunks`` equal-width
+    bucket keys, as SQL text: chunk k is the integer
+    ``(sig >> (64 - (k+1)·w)) & (2^w − 1)`` — two integer ops per
+    chunk, rendered for ONE parser call.  The ``& mask`` makes the
+    arithmetic shift's sign-fill irrelevant.
 
     Pigeonhole: two docs within Hamming distance ``n_chunks - 1`` share
     ≥1 identical chunk, so a per-chunk bucket join finds all pairs with
     d ≤ 7 (at the default 8×8-bit) without all-pairs comparison.  8-bit
     chunks bucket coarsely (256 values) — at corpus scale widen the
-    signature (128-bit) and keep 16-bit chunks to hold candidate counts
-    down; the planted near-dups here (J 0.90–0.99 over ~90-shingle
-    sets) land at Hamming 1–10, so d≤8 is the operating point.
-    """
-    w = 64 // n_chunks
-    return F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("band"),
-                F.array_join(F.slice(bits, k * w + 1, w), "").alias("key"),
-            )
-            for k in range(n_chunks)
-        ]
-    )
-
-
-def simhash_chunks_packed(sig: Column, n_chunks: int = 8) -> Column:
-    """:func:`simhash_chunks` over the packed 64-bit signature: chunk k
-    is the integer ``(sig >>> (64 - (k+1)·w)) & (2^w − 1)`` — the same
-    bucket partition as the bit-string keys (identical index ranges,
-    bijective key mapping), but built from two integer ops instead of an
-    array slice + string join.  The ``& mask`` makes the arithmetic
-    shift's sign-fill irrelevant."""
-    w = 64 // n_chunks
-    mask = (1 << w) - 1
-    return F.array(
-        *[
-            F.struct(
-                F.lit(k).alias("band"),
-                F.shiftright(sig, 64 - (k + 1) * w).bitwiseAND(F.lit(mask)).alias("key"),
-            )
-            for k in range(n_chunks)
-        ]
-    )
-
-
-def simhash_chunks_packed_sql(sig_sql: str, n_chunks: int = 8) -> str:
-    """:func:`simhash_chunks_packed` as SQL text — same (band, key)
-    structs via ONE parser call (r13 wave 10 discipline; differential
-    pin in tests/test_vector_sql_twins.py)."""
+    signature (128-bit, :func:`simhash_chunks_packed_128_sql`) and keep
+    16-bit chunks to hold candidate counts down; the planted near-dups
+    here (J 0.90–0.99 over ~90-shingle sets) land at Hamming 1–10, so
+    d≤8 is the operating point."""
     w = 64 // n_chunks
     mask = (1 << w) - 1
     return "array({})".format(
@@ -663,8 +460,12 @@ def simhash_chunks_packed_sql(sig_sql: str, n_chunks: int = 8) -> str:
 def simhash_chunks_packed_128_sql(
     sig1_sql: str, sig2_sql: str, n_chunks: int = 8
 ) -> str:
-    """:func:`simhash_chunks_packed_128` as SQL text — see
-    :func:`simhash_chunks_packed_sql`."""
+    """:func:`simhash_chunks_packed_sql` over the two-word 128-bit
+    signature: ``n_chunks`` equal chunks of ``128 / n_chunks`` bits,
+    chunk k sliced out of sig1 (k < n_chunks/2) or sig2 with two
+    integer ops.  Pigeonhole: Hamming ≤ n_chunks − 1 ⇒ ≥1 shared
+    chunk; beyond that the bucket join is probabilistic (the planted
+    near-dup recall is pinned in tests/test_pipeline.py)."""
     w = 128 // n_chunks
     assert 64 % w == 0, "chunk width must divide the 64-bit words"
     per_word = 64 // w

@@ -87,8 +87,8 @@ CHANGED_ROUND: dict[str, int] = {
     "events_session_window": 13,
     # r13 optimization round, operator-module rewrites invisible to the
     # source-hash guard — output values identical in every case, plan/
-    # construction shape changed: kmeans.centroid_literal and
-    # similarity.lsh_bucket now build their literals as ONE parsed SQL
+    # construction shape changed: the kmeans centroid literal and the
+    # similarity sign-LSH plane literal are now built as ONE parsed SQL
     # expression (was a py4j call per element); graph.kcore_peel no
     # longer checkpoints `survivors` (derived from n0 minus the peeled
     # sets instead)
@@ -139,6 +139,9 @@ CHANGED_ROUND: dict[str, int] = {
     #   distributed fall-through; pipeline/similarity.expr_cached parse
     #   memo on the plane folds — the cuts-family and knn entries above
     #   are bumped to 14 in place
+    # r15 similarity.brute_force_topk rebuilt on the dot_sql/l2_norm_sql
+    # text folds (operator module, invisible to the hash guard)
+    "ann_cosine_topk": 15,
 }
 
 

@@ -5,6 +5,7 @@ the SimHash chunk pigeonhole guarantee."""
 
 from __future__ import annotations
 
+import hashlib
 import random
 
 import pytest
@@ -84,8 +85,8 @@ def test_simhash_chunk_pigeonhole(spark):
             f ^= 1 << pos
         rows.append((trial, signed(u), signed(f)))
     df = spark.createDataFrame(rows, "trial long, a long, b long")
-    ka = D.simhash_chunks_packed(F.col("a"), 8)
-    kb = D.simhash_chunks_packed(F.col("b"), 8)
+    ka = F.expr(D.simhash_chunks_packed_sql("a", 8))
+    kb = F.expr(D.simhash_chunks_packed_sql("b", 8))
     shared = df.select(
         "trial",
         F.size(
@@ -113,66 +114,87 @@ def test_candidate_pairs_symmetric_and_deduped(spark, rng):
     assert got == [(1, 2)]
 
 
-def test_minhash_hof_and_codegen_forms_agree(spark, rng):
-    """The two MinHash implementations — the in-array HOF form
-    (``minhash_signature``, exported API) and the explode→groupBy
-    codegen form every query uses (``minhash_signature_df``) — are the
-    same math by construction and must stay bit-identical; without a
-    differential pin, a drift in one (e.g. a base-hash or modulus edit)
-    would silently desynchronize the public API from the oracled query
-    path."""
+def test_minhash_signature_df_matches_python(spark, rng):
+    """minhash_signature_df (the explode→groupBy codegen form every
+    query uses) against a pure-Python MinHash: v1/v2 are the two 56-bit
+    halves of each shingle's md5, member j is ``(v1 + j·v2) mod p`` and
+    the signature keeps its minimum over the shingle set.  A drift in
+    the base hash, the halves or the affine family fails here."""
     rows = [
         (i, " ".join(rng.choice("abcdefgh") + str(rng.randrange(40)) for _ in range(rng.randrange(1, 30))))
         for i in range(60)
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     sh = D.shingle_frame(df, "text", 3)
-    via_df = {
-        r["doc_id"]: r["sig"]
+    got = {
+        r["doc_id"]: list(r["sig"])
         for r in D.minhash_signature_df(sh, "doc_id", "shingles", 12).collect()
     }
-    via_hof = {
-        r["doc_id"]: r["sig"]
-        for r in sh.select("doc_id", D.minhash_signature(F.col("shingles"), 12).alias("sig")).collect()
-    }
-    assert via_df == via_hof
+
+    def ref(shingles):
+        halves = [
+            (int(h[:14], 16), int(h[14:28], 16))
+            for h in (hashlib.md5(s.encode()).hexdigest() for s in shingles)
+        ]
+        p = (1 << 61) - 1  # the Mersenne prime modulus
+        return [min((v1 + j * v2) % p for v1, v2 in halves) for j in range(12)]
+
+    want = {r["doc_id"]: ref(r["shingles"]) for r in sh.collect()}
+    assert got == want
 
 
-def test_word_shingles_matches_shingle_frame(spark, rng):
-    """word_shingles (exported per-column form) vs shingle_frame (the
-    staged-projection form every query uses): same output by contract
-    (shingle_frame's own docstring claims it), now pinned — including
-    short docs (< k tokens, the fallback branch) and repeated-space
-    texts where split() emits empty tokens."""
+def _shingles_ref(text: str, k: int) -> list[str]:
+    toks = text.split(" ")
+    if len(toks) < k:
+        return [" ".join(toks)]
+    return sorted({" ".join(toks[i:i + k]) for i in range(len(toks) - k + 1)})
+
+
+def test_shingle_frame_matches_python_shingler(spark, rng):
+    """shingle_frame against a pure-Python shingler: single-space
+    tokens (repeated spaces yield empty tokens), distinct k-shingles,
+    and one whole-doc shingle for docs shorter than k tokens."""
     texts = [
         " ".join(rng.choice("abcdef") for _ in range(rng.randrange(1, 12)))
         for _ in range(40)
-    ] + ["a", "a b", "x  y   z", "p p p p p"]
+    ] + ["a", "a b", "x  y   z", "p p p p p", "", " lead", "trail  "]
     df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
-    via_col = {
-        r["doc_id"]: sorted(r["s"])
-        for r in df.select("doc_id", D.word_shingles(F.col("text"), 3).alias("s")).collect()
-    }
-    via_frame = {
+    got = {
         r["doc_id"]: sorted(r["shingles"])
         for r in D.shingle_frame(df, "text", 3).collect()
     }
-    assert via_col == via_frame
+    assert got == {i: _shingles_ref(t, 3) for i, t in enumerate(texts)}
 
 
-def test_simhash64_matches_simhash_df_bits(spark, rng):
-    """simhash64 (exported in-array HOF form) vs simhash_df (the
-    packed-lane codegen form every query uses): bit-identical 64-bit
-    signatures on ALL inputs — the same differential that caught
-    minhash_signature's index-shadowed closure.
+def _simhash_ref(tokens: list[str], n_words: int) -> list[int]:
+    """Charikar SimHash over 32-bit md5 words: every token (with its
+    multiplicity) adds ±1 per bit; a bit is set iff its sum is
+    positive.  Bits MSB-first."""
+    n_bits = 32 * n_words
+    acc = [0] * n_bits
+    for t in tokens:
+        h = hashlib.md5(t.encode()).hexdigest()
+        words = [int(h[8 * q:8 * q + 8], 16) for q in range(n_words)]
+        for i in range(n_bits):
+            q, k = divmod(i, 32)
+            acc[i] += 1 if (words[q] >> (31 - k)) & 1 else -1
+    return [1 if a > 0 else 0 for a in acc]
 
-    UNCONDITIONAL since r13 (VERDICT r12 ask #4): both forms now weight
-    bits by token multiplicity, so the generator deliberately includes
-    repeated tokens (small alphabet, skewed repeats) plus the old
-    distinct-only shape.  Until r13 simhash64 array_distinct-ed its
-    input and the twins agreed only on the distinct arrays
-    shingle_frame emits — a silent divergence for any external caller
-    feeding raw token arrays."""
+
+def _pack_signed(bits: list[int]) -> int:
+    u = int("".join(map(str, bits)), 2)
+    return u - (1 << 64) if u >= (1 << 63) else u
+
+
+def test_simhash_df_matches_python_charikar(spark, rng):
+    """simhash_df and simhash_df_128 (the packed-lane codegen forms the
+    queries use) against a pure-Python Charikar SimHash over the md5
+    words — bit-identical on ALL inputs.
+
+    The generator deliberately includes repeated tokens (small
+    alphabet, skewed repeats) next to distinct-only arrays: bits are
+    weighted by token multiplicity, so a form that silently
+    de-duplicated its input would fail on the first half."""
     rows = [
         (
             i,
@@ -193,41 +215,42 @@ def test_simhash64_matches_simhash_df_bits(spark, rng):
         for i in range(25)
     ]
     df = spark.createDataFrame(rows, "doc_id long, shingles array<string>")
-    via_hof = {
-        r["doc_id"]: r["b"]
-        for r in df.select("doc_id", D.simhash64(F.col("shingles")).alias("b")).collect()
+    s64 = {
+        r["doc_id"]: (list(r["bv"]), r["sig"])
+        for r in D.simhash_df(df, "doc_id", "shingles").collect()
     }
-    via_df = {
-        r["doc_id"]: r["bv"]
-        for r in D.simhash_df(df, "doc_id", "shingles").select("doc_id", "bv").collect()
+    s128 = {
+        r["doc_id"]: (r["sig1"], r["sig2"])
+        for r in D.simhash_df_128(df, "doc_id", "shingles").collect()
     }
-    assert via_hof == via_df
+    for doc_id, toks in rows:
+        bits = _simhash_ref(toks, 2)
+        assert s64[doc_id] == (bits, _pack_signed(bits)), doc_id
+        wide = _simhash_ref(toks, 4)
+        assert s128[doc_id] == (_pack_signed(wide[:64]), _pack_signed(wide[64:])), doc_id
 
 
 def test_simhash_chunk_string_and_packed_keys_are_bijective(spark, rng):
-    """simhash_chunks (exported bit-string-key form) vs
-    simhash_chunks_packed (the integer-key form the query uses): same
-    bucket partition under the documented bijection — parsing each
-    bit-string key as base-2 must yield exactly the packed integer key
-    for the same (doc, band), across random signatures including the
-    all-ones/all-zeros extremes (sign-fill edge of the arithmetic
-    shift)."""
+    """simhash_chunks_packed_sql (the integer-key form the query uses)
+    against bit-string chunk keys sliced in Python: parsing each
+    8-character slice of the MSB-first bit string as base-2 must yield
+    exactly the packed integer key for the same (doc, band), across
+    random signatures including the all-ones/all-zeros extremes and
+    both sign limits (sign-fill edge of the arithmetic shift)."""
     sigs = [rng.randrange(-(2**63), 2**63) for _ in range(40)] + [0, -1, 2**63 - 1, -(2**63)]
-    rows = []
-    for i, s in enumerate(sigs):
-        bits = [(s >> (63 - b)) & 1 for b in range(64)]
-        rows.append((i, s, bits))
-    df = spark.createDataFrame(rows, "doc_id long, sig long, bv array<long>")
+    df = spark.createDataFrame(list(enumerate(sigs)), "doc_id long, sig long")
     packed = {
         (r["doc_id"], e["band"]): e["key"]
-        for r in df.select("doc_id", D.simhash_chunks_packed(F.col("sig"), 8).alias("c")).collect()
+        for r in df.select(
+            "doc_id", F.expr(D.simhash_chunks_packed_sql("sig", 8)).alias("c")
+        ).collect()
         for e in r["c"]
     }
-    strkeys = {
-        (r["doc_id"], e["band"]): int(e["key"], 2)
-        for r in df.select("doc_id", D.simhash_chunks(F.col("bv"), 8).alias("c")).collect()
-        for e in r["c"]
-    }
+    strkeys = {}
+    for i, s in enumerate(sigs):
+        bits = "".join(str((s >> (63 - b)) & 1) for b in range(64))
+        for k in range(8):
+            strkeys[(i, k)] = int(bits[8 * k:8 * k + 8], 2)
     assert strkeys == packed
 
 
@@ -235,8 +258,10 @@ def test_adaptive_band_rungs_match_explicit_layouts(spark, rng):
     """Every LSH_BAND_LADDER rung — including the 3×4 middle and the
     2×6 floor that no driver scale (nor .tmp/sf10's 500k docs, for the
     floor) ever reaches — is wired correctly: forcing the corpus-count
-    input of ``lsh_band_keys_adaptive`` to a value in each rung's range
-    must reproduce ``lsh_band_keys(sig, bands, rows)`` exactly, and
+    input of ``lsh_band_keys_adaptive_sql`` to a value in each rung's
+    range must reproduce ``lsh_band_keys_sql(sig, bands, rows)`` exactly
+    (itself pinned against Python md5 band keys in
+    tests/test_vector_sql_twins.py), and
     ``lsh_rpb_case_sql`` must resolve to the same rows-per-band in
     DuckDB under the same forced count.  This pins the CASE arithmetic
     of the never-exercised branches at unit-test cost; the REAL 3×4
@@ -254,10 +279,10 @@ def test_adaptive_band_rungs_match_explicit_layouts(spark, rng):
         prev_max = max_n
         got = df.select(
             "doc_id",
-            D.lsh_band_keys_adaptive(F.col("sig"), F.lit(forced_n)).alias("bk"),
+            F.expr(D.lsh_band_keys_adaptive_sql("sig", str(forced_n))).alias("bk"),
         )
         want = df.select(
-            "doc_id", D.lsh_band_keys(F.col("sig"), bands, rpb).alias("bk")
+            "doc_id", F.expr(D.lsh_band_keys_sql("sig", bands, rpb)).alias("bk")
         )
         assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0, (
             f"adaptive rung n={forced_n} != explicit {bands}x{rpb}"

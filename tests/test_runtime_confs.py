@@ -45,3 +45,43 @@ def test_dataframe_debugging_capture_disabled(spark):
 
     apply_runtime_confs(spark)
     assert eu.is_debugging_enabled() is False
+
+
+def test_debugging_capture_flip_cuts_py4j_calls(spark):
+    # behavioural canary for the private-API flip: the attribute check
+    # above passes even if a pyspark bump stops consulting the cache.
+    # Count py4j round trips for one trivial Column operation with the
+    # gate off and on; the off count must be lower, or the flip has
+    # silently stopped saving anything
+    import pyspark.errors.utils as eu
+    import pyspark.sql.functions as F
+    from py4j import clientserver, java_gateway
+
+    apply_runtime_confs(spark)
+    calls = [0]
+    classes = (clientserver.ClientServerConnection, java_gateway.GatewayConnection)
+    saved = {cls: cls.send_command for cls in classes}
+    saved_gate = eu._enable_debugging_cache
+
+    def counting(send):
+        def send_command(self, command, *args, **kwargs):
+            calls[0] += 1
+            return send(self, command, *args, **kwargs)
+
+        return send_command
+
+    def count(gate: bool) -> int:
+        eu._enable_debugging_cache = gate
+        calls[0] = 0
+        F.col("x") + 1
+        return calls[0]
+
+    try:
+        for cls, send in saved.items():
+            cls.send_command = counting(send)
+        off, on = count(False), count(True)
+    finally:
+        for cls, send in saved.items():
+            cls.send_command = send
+        eu._enable_debugging_cache = saved_gate
+    assert 0 < off < on, (off, on)

@@ -69,6 +69,36 @@ def to_arrow(df: DataFrame) -> pa.Table:
     return df.toArrow()
 
 
+#: Row count at or below which an operator may solve its input on the
+#: driver instead of running distributed rounds.  Same principle as
+#: Spark's broadcast-join threshold: 4M rows of two 8-byte columns is
+#: ~64 MB through Arrow into numpy — trivial for the driver — while
+#: every distributed round or eager job costs a full scheduling round
+#: trip.  The inputs gated here (verified near-dup pairs, trade-graph
+#: edges, value histograms) are aggregates, orders of magnitude smaller
+#: than the corpus, so at scale the gate still usually fires; the
+#: distributed path stays the correctness backstop above it.
+SMALL_INPUT_ROWS = 4_000_000
+
+
+def small_input_or_none(df: DataFrame) -> pa.Table | None:
+    """``df`` as an Arrow table when it has at most
+    :data:`SMALL_INPUT_ROWS` rows and no NULL in any column, else
+    ``None`` (the caller runs its distributed path).
+
+    One job on the small path: ``limit(L+1)`` returns every row
+    whenever there are at most L, so the same collect both answers "is
+    the driver-local path safe?" and delivers the input.  Above the
+    limit the probe is an early-exiting CollectLimit, a bounded partial
+    pass.  NULLs fall through because the driver-local solvers
+    (numpy union-find, k-core peel, cut ranks) have no NULL semantics
+    of their own; the distributed paths own them."""
+    tbl = df.limit(SMALL_INPUT_ROWS + 1).toArrow()
+    if tbl.num_rows > SMALL_INPUT_ROWS or any(c.null_count for c in tbl.columns):
+        return None
+    return tbl
+
+
 def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition a scan up to the session's task slots —
     ONLY when the scan yields fewer partitions than slots.
@@ -328,33 +358,28 @@ class Tables:
         return TPCH_TABLES
 
 
-#: Session-scoped memo of Tables instances, keyed on (applicationId,
-#: realpath(sf_dir)).  Each ``spark.read.parquet`` call costs a footer
-#: read + InMemoryFileIndex build + a dozen py4j roundtrips (~30-150 ms
-#: measured at sf0.1) and every query invocation used to pay it fresh
-#: for every table it touches — pure driver-side METADATA work repeated
-#: hundreds of times per bench/driver sweep.  Reusing the lazy
-#: DataFrame HANDLE caches only schema + file listing (what Spark's own
-#: catalog does for a registered table): no data, no results — every
-#: action on the handle still computes from the parquet input.
-#: ``fresh=True`` bypasses and replaces the entry (for callers that
-#: rewrite files under the same path mid-session).
-_TABLES_MEMO: dict[tuple[str, str], Tables] = {}
-
-
-def load_tables(spark: SparkSession, sf_dir: str, fresh: bool = False) -> Tables:
+def load_tables(spark: SparkSession, sf_dir: str) -> Tables:
     """Lazy table map for ``sf_dir``; also applies runtime confs (UTC
     timezone, nanos-as-long) so results are deterministic regardless of
-    who constructed the session.  Memoized per (session, dir) — see
-    ``_TABLES_MEMO``."""
+    who constructed the session.
+
+    Memoized per (session, ``realpath(sf_dir)``) in the session's own
+    memo (:func:`fletcher_spark.session._session_state`), so a stopped
+    session's map dies with it.  Each ``spark.read.parquet`` call costs
+    a footer read, an InMemoryFileIndex build and a dozen py4j
+    round-trips (~30-150 ms measured at sf0.1), and every query
+    invocation used to pay it fresh for every table it touches.
+    Reusing the lazy DataFrame HANDLE caches only schema and file
+    listing (what Spark's own catalog does for a registered table): no
+    data, no results — every action on the handle still computes from
+    the parquet input."""
     import os
 
-    from fletcher_spark.session import apply_runtime_confs
+    from fletcher_spark.session import _session_state, apply_runtime_confs
 
     apply_runtime_confs(spark)
-    key = (spark.sparkContext.applicationId, os.path.realpath(sf_dir))
-    t = None if fresh else _TABLES_MEMO.get(key)
-    if t is None or t._spark is not spark:
-        t = Tables(spark, sf_dir)
-        _TABLES_MEMO[key] = t
-    return t
+    tables = _session_state(spark).setdefault("tables", {})
+    key = os.path.realpath(sf_dir)
+    if key not in tables:
+        tables[key] = Tables(spark, sf_dir)
+    return tables[key]

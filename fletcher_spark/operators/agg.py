@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from fletcher_spark.io import small_input_or_none
+
 
 def _null_poison(c: Column, agg: Column) -> Column:
     """pandas skipna=False: result is NULL if any input value is null."""
@@ -145,50 +147,15 @@ REDUCTIONS = {
 }
 
 
-def _sql_double(x) -> str:
-    """A Python float as an EXACT Spark SQL double literal —
-    ``float.__repr__`` round-trips doubles bit-exactly (the
-    operators/kmeans.py:centroid_literal_sql discipline); non-finite and
-    NULL spelled via CAST."""
-    import math
-
-    if x is None:
-        return "CAST(NULL AS DOUBLE)"
-    x = float(x)
-    if math.isnan(x):
-        return "CAST('NaN' AS DOUBLE)"
-    if math.isinf(x):
-        return f"CAST('{'Infinity' if x > 0 else '-Infinity'}' AS DOUBLE)"
-    return f"{x!r}D"
-
-
-def _sql_str(s: str) -> str:
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-#: Histogram-row count below which the MATERIALIZED cut-point paths
-#: solve locally on the driver instead of running the staged
-#: three-job sequence (stats collect → bucket-total collect → cut
-#: aggregate).  Same gating principle as
-#: operators/graph.py:LOCAL_EDGE_LIMIT: 4M (v double, c long) rows is
-#: ~64 MB through Arrow — trivial for the driver — while every extra
-#: eager job costs a full scheduling round trip.  The probe is ONE
-#: ``limit(L+1).toArrow()`` job (CollectLimitExec.doExecute: per-
-#: partition local limit, one pass — it also materializes the
-#: histogram cache for the >L fall-through and for prehist callers'
-#: other branches).  The distributed staged path stays the >L
-#: fallback, so scale behavior is unchanged.
-LOCAL_HIST_LIMIT = 4_000_000
-
-
 def _cuts_local(hist, keys: list, k: int):
     """Driver-local cut computation over a bounded histogram — the
-    r13 single-job fast path for ``driver_stage=True``.  Returns a
-    LocalRelation-backed DataFrame ``(keys..., cuts, n)`` or ``None``
-    to fall through to the distributed staged path (histogram over
-    ``LOCAL_HIST_LIMIT``, empty, or containing NULL/NaN values — the
-    coarse-bucket machinery gives those a bucket-dependent global
-    position this replica does not reproduce).
+    single-job fast path of the ``materialize=True`` wrappers.  Returns
+    a LocalRelation-backed DataFrame ``(keys..., cuts, n)`` or ``None``
+    to fall back to the lazy :func:`_cuts_by_key` plan (histogram over
+    the :func:`fletcher_spark.io.small_input_or_none` gate, empty, or
+    containing NULL keys or NaN values — the coarse-bucket machinery
+    gives NaN a bucket-dependent global position this replica does not
+    reproduce).
 
     Arithmetic is the EXACT rank definition the distributed path
     computes: rows sorted by value ascending, cumulative exact-long
@@ -196,7 +163,7 @@ def _cuts_local(hist, keys: list, k: int):
     ``ceil(double(i) · n / k)`` — the threshold is evaluated in the
     same IEEE double operation order as the Column form
     (``lit(float(i)) * n / k``), so the two paths are bit-identical
-    (pinned by tests/test_cuts_driver_stage.py's differentials).
+    (pinned by the local-vs-lazy cut-point differential tests).
 
     Vectorized on numpy arrays end-to-end (the
     operators/graph.py:_local_union_find discipline): a near-continuous
@@ -208,24 +175,18 @@ def _cuts_local(hist, keys: list, k: int):
 
     import numpy as np
 
-    tbl = hist.limit(LOCAL_HIST_LIMIT + 1).toArrow()
+    tbl = small_input_or_none(hist)
+    if tbl is None or tbl.num_rows == 0:
+        return None
     nrows = tbl.num_rows
-    if nrows > LOCAL_HIST_LIMIT or nrows == 0:
-        return None
-    vcol = tbl.column("v")
-    if vcol.null_count:
-        return None
-    v = vcol.to_numpy(zero_copy_only=False)
+    v = tbl.column("v").to_numpy(zero_copy_only=False)
     if np.isnan(v).any():
         return None
     c = tbl.column("c").to_numpy(zero_copy_only=False).astype(np.int64)
     kraw = []
     gid = np.zeros(nrows, dtype=np.int64)
     for kc in keys:
-        col = tbl.column(kc)
-        if col.null_count:  # the staged/lazy tiers own NULL keys
-            return None
-        kv = col.to_numpy(zero_copy_only=False)
+        kv = tbl.column(kc).to_numpy(zero_copy_only=False)
         kraw.append(kv)
         _, inv = np.unique(kv, return_inverse=True)
         gid = gid * (int(inv.max()) + 1) + inv
@@ -247,9 +208,9 @@ def _cuts_local(hist, keys: list, k: int):
             idx = int(np.searchsorted(cum, thr, side="left"))
             if idx >= e - s:
                 # thr > cum[-1] is reachable only when the double product
-                # rounds up near 2^53; the staged path yields a NULL cut
+                # rounds up near 2^53; the lazy plan yields a NULL cut
                 # there, which this replica cannot represent in-place —
-                # fall through to the distributed twin (ADVICE r13)
+                # fall back to it (ADVICE r13)
                 return None
             cuts.append(float(v[s + idx]))
         src = int(order[s])  # original row index: key values for this group
@@ -264,27 +225,12 @@ def _cuts_local(hist, keys: list, k: int):
     return hist.sparkSession.createDataFrame(out_rows, schema)
 
 
-def _driver_stage_ok(keys: list, stats_rows) -> bool:
-    """Driver staging supports the unkeyed case and a single STRING
-    key with no NULL values (map literals cannot hold NULL keys, and a
-    non-string key would need type-faithful SQL rendering) — exactly
-    the shapes the materialize=True consumers use.  Anything else
-    falls back to the lazy join-back plan (then collected, unchanged
-    semantics)."""
-    if not keys:
-        return True
-    if len(keys) != 1:
-        return False
-    return all(isinstance(r[0], str) for r in stats_rows)
-
-
 def _cuts_by_key(
     hist,
     key_cols: tuple,
     k: int,
     n_coarse: int,
     hint_broadcast: bool = True,
-    driver_stage: bool = False,
 ):
     """Shared two-level prefix-sum core: a persisted ``(key..., v, c)``
     value histogram → ``(key..., cuts array<double>, n long)``.  The
@@ -300,80 +246,15 @@ def _cuts_by_key(
     the hint would force an unbounded broadcast at scale; unhinted,
     Catalyst broadcasts them at toy scale and shuffle-joins at real
     scale — both on the same key the histogram is already partitioned
-    by.
-
-    ``driver_stage`` (r13, guide §1.2/§7.3): for the MATERIALIZED
-    paths — which end in a driver ``collect()`` of the cuts row(s)
-    anyway — the stats (|keys| rows) and coarse-bucket offsets
-    (|keys|×n_coarse rows) are themselves bounded model state, so they
-    are collected to the driver and re-attached as parsed literal
-    columns instead of join-backs.  Every downstream EXPRESSION
-    (coarse clamp, in-bucket window, ``off + cum_in``, the
-    ``ceil(i·n/k)`` thresholds) is the SAME Column code on both paths,
-    only the source of ``vmin``/``vmax``/``n``/``off`` differs —
-    counts are exact longs and the doubles round-trip via
-    ``float.__repr__``, so the two modes are value-identical (pinned
-    by tests/test_operators.py's driver-stage differential).  This
-    replaces two broadcast-build jobs plus their AQE join stages
-    (~15-19 stage-jobs measured at sf0.1) with three sequential jobs
-    over the persisted histogram.  Lazy callers (materialize=False)
-    never stage: their contract is a plan, not jobs."""
+    by."""
     from pyspark.sql import Window
 
     keys = list(key_cols)
     bc = F.broadcast if hint_broadcast else (lambda d: d)
-    if driver_stage:
-        # r13 single-job fast path: below LOCAL_HIST_LIMIT the whole
-        # histogram is bounded driver state — one limit-probe job
-        # replaces the staged three-job sequence; >L (or NULL/NaN
-        # values) falls through to the staged path below, with the
-        # probe having already materialized the histogram cache
-        local = _cuts_local(hist, keys, k)
-        if local is not None:
-            return local
     stats = hist.groupBy(*keys).agg(
         F.min("v").alias("vmin"), F.max("v").alias("vmax"), F.sum("c").alias("n")
     )
-    staged_rows = None
-    if driver_stage:
-        rows = stats.collect()  # job 1: |keys| rows (bounded model state)
-        # empty keyed stats (zero-row histogram) falls back: a typed
-        # empty-map literal is not worth the edge case — the lazy plan
-        # produces the same zero rows with the right schema
-        if rows and _driver_stage_ok(keys, rows):
-            staged_rows = rows
-    if staged_rows is not None:
-        if keys:
-            key = F.col(keys[0])
-            vmin_m = "map(" + ",".join(
-                f"{_sql_str(r[0])},{_sql_double(r['vmin'])}" for r in staged_rows
-            ) + ")"
-            vmax_m = "map(" + ",".join(
-                f"{_sql_str(r[0])},{_sql_double(r['vmax'])}" for r in staged_rows
-            ) + ")"
-            n_m = "map(" + ",".join(
-                f"{_sql_str(r[0])},{int(r['n'])}L" for r in staged_rows
-            ) + ")"
-            h = hist.withColumns(
-                {
-                    "vmin": F.element_at(F.expr(vmin_m), key),
-                    "vmax": F.element_at(F.expr(vmax_m), key),
-                    "n": F.element_at(F.expr(n_m), key),
-                }
-            )
-        else:
-            r = staged_rows[0]
-            h = hist.withColumns(
-                {
-                    "vmin": F.expr(_sql_double(r["vmin"])),
-                    "vmax": F.expr(_sql_double(r["vmax"])),
-                    "n": (
-                        F.lit(None) if r["n"] is None else F.lit(int(r["n"]))
-                    ).cast("long"),
-                }
-            )
-    else:
-        h = hist.join(bc(stats), keys) if keys else hist.crossJoin(F.broadcast(stats))
+    h = hist.join(bc(stats), keys) if keys else hist.crossJoin(F.broadcast(stats))
     span = F.col("vmax") - F.col("vmin")
     coarse = (
         F.when(span <= 0, F.lit(0))
@@ -390,54 +271,20 @@ def _cuts_by_key(
         Window.unboundedPreceding, 0
     )
     h2 = h.withColumn("cum_in", F.sum("c").over(w_in))
-    if staged_rows is not None:
-        # job 2: per-(key, cb) bucket totals — |keys|×n_coarse rows —
-        # exclusive running offsets computed in exact long arithmetic
-        # on the driver (identical to the w_off window: distinct cb
-        # per key, ordered, preceding-only sum)
-        bt_rows = h.groupBy(*keys, "cb").agg(F.sum("c").alias("bt")).collect()
-        per_key: dict = {}
-        for r in bt_rows:
-            per_key.setdefault(r[0] if keys else None, {})[r["cb"]] = int(r["bt"])
-        def _dense_offsets(bts: dict) -> list:
-            run, out = 0, []
-            for cb in range(n_coarse):
-                out.append(run)
-                run += bts.get(cb, 0)
-            return out
-        if keys:
-            off_sql = "map(" + ",".join(
-                _sql_str(kv)
-                + ",array("
-                + ",".join(f"{o}L" for o in _dense_offsets(bts))
-                + ")"
-                for kv, bts in sorted(per_key.items())
-            ) + ")"
-            off_col = F.element_at(
-                F.element_at(F.expr(off_sql), F.col(keys[0])), F.col("cb") + 1
-            )
-        else:
-            offs_list = _dense_offsets(per_key.get(None, {}))
-            off_sql = "array(" + ",".join(f"{o}L" for o in offs_list) + ")"
-            off_col = F.element_at(F.expr(off_sql), F.col("cb") + 1)
-        g = h2.withColumn("off", off_col).withColumn(
-            "cum", F.col("off") + F.col("cum_in")
+    # offsets window input: |keys| x n_coarse rows — constant-sized
+    w_off = Window.partitionBy(*keys).orderBy("cb").rowsBetween(
+        Window.unboundedPreceding, -1
+    )
+    offs = (
+        h2.groupBy(*keys, "cb")
+        .agg(F.sum("c").alias("bt"))
+        .select(
+            *keys, "cb", F.coalesce(F.sum("bt").over(w_off), F.lit(0)).alias("off")
         )
-    else:
-        # offsets window input: |keys| x n_coarse rows — constant-sized
-        w_off = Window.partitionBy(*keys).orderBy("cb").rowsBetween(
-            Window.unboundedPreceding, -1
-        )
-        offs = (
-            h2.groupBy(*keys, "cb")
-            .agg(F.sum("c").alias("bt"))
-            .select(
-                *keys, "cb", F.coalesce(F.sum("bt").over(w_off), F.lit(0)).alias("off")
-            )
-        )
-        g = h2.join(bc(offs), keys + ["cb"]).withColumn(
-            "cum", F.col("off") + F.col("cum_in")
-        )
+    )
+    g = h2.join(bc(offs), keys + ["cb"]).withColumn(
+        "cum", F.col("off") + F.col("cum_in")
+    )
     aggs = [
         F.min(
             F.when(
@@ -454,6 +301,25 @@ def _cuts_by_key(
         F.array(*[F.col(f"_cut{i}") for i in range(1, k)]).alias("cuts"),
         "n",
     )
+
+
+def _cuts(
+    hist,
+    key_cols: tuple,
+    k: int,
+    n_coarse: int,
+    materialize: bool,
+    hint_broadcast: bool = True,
+):
+    """The cut-point frame of every wrapper: for ``materialize=True``
+    the driver-local :func:`_cuts_local` when the histogram passes its
+    gate, else (and always for lazy callers) the :func:`_cuts_by_key`
+    plan.  Both compute the same rank definition, so the fallback
+    changes cost, never values."""
+    local = _cuts_local(hist, list(key_cols), k) if materialize else None
+    if local is not None:
+        return local
+    return _cuts_by_key(hist, key_cols, k, n_coarse, hint_broadcast)
 
 
 def exact_cut_points(
@@ -529,7 +395,7 @@ def exact_cut_points(
             hist = hist.persist()
     else:
         hist = prehist
-    out = _cuts_by_key(hist, (), k, n_coarse, driver_stage=materialize)
+    out = _cuts(hist, (), k, n_coarse, materialize)
     if not materialize:
         return out
     rows = out.collect()  # one row: k-row model state, driver-pinned
@@ -586,10 +452,7 @@ def exact_cut_points_by_key(
     # stats/offsets join-backs must not carry forced broadcast hints
     # (key-domain-sized); materialize=True asserts a dimension-sized
     # domain where the hint is right
-    out = _cuts_by_key(
-        hist, tuple(keys), k, n_coarse,
-        hint_broadcast=materialize, driver_stage=materialize,
-    )
+    out = _cuts(hist, tuple(keys), k, n_coarse, materialize, hint_broadcast=materialize)
     if not materialize:
         return out
     rows = out.collect()
@@ -635,7 +498,7 @@ def exact_cut_points_multi(
     hist = melted.groupBy("m", "v").agg(F.count(F.lit(1)).alias("c"))
     if materialize:
         hist = hist.persist()
-    per_m = _cuts_by_key(hist, ("m",), k, n_coarse, driver_stage=materialize)
+    per_m = _cuts(hist, ("m",), k, n_coarse, materialize)
     # coalesce to an empty array for an all-NULL metric: it has no
     # histogram row, and NULL cuts would push assign_cut_buckets
     # outside its 1..k contract — with empty cuts every row (all NULL

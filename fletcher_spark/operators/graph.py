@@ -25,23 +25,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-#: Edge count below which components are solved with driver-side
-#: union-find instead of iterative distributed rounds.  Same gating
-#: principle as Spark's broadcast-join threshold: 4M edges collected
-#: via Arrow into numpy arrays is ~64 MB of int64 pairs (the r2
-#: Row-object path materialized multi-GB of Python objects at this
-#: size — ADVICE r2; fixed by the Arrow/numpy union-find below) —
-#: trivial for the driver, while each distributed round costs a full
-#: job (join + shuffle + action).  The edge set here is the *verified
-#: near-dup pair* set, orders of magnitude smaller than the corpus,
-#: so at 100 TB this gate still usually fires; the iterative path
-#: below is the correctness backstop for adversarial pair explosions.
-LOCAL_EDGE_LIMIT = 4_000_000
+from fletcher_spark.io import small_input_or_none
 
 
 def _local_union_find(tbl, spark, id_type) -> DataFrame:
     """Union-find over a collected Arrow edge table → (id, label=min id
-    of component).  Only reached under LOCAL_EDGE_LIMIT.
+    of component).  Only reached under ``io.SMALL_INPUT_ROWS``.
 
     Works on numpy arrays and factorizes vertex ids to dense indices,
     so the driver holds two int64 index arrays plus one parent array —
@@ -86,15 +75,16 @@ def connected_components(
     src: str = "id1",
     dst: str = "id2",
     max_rounds: int = 15,
-    local_edge_limit: int = LOCAL_EDGE_LIMIT,
 ) -> DataFrame:
     """Label every vertex of the undirected edge list with the minimum
     vertex id reachable from it.
 
-    Small edge sets (≤ ``local_edge_limit``) are solved with
-    driver-side union-find — one collect of the (already pair-verified,
-    corpus-decimated) edge list beats O(diameter) distributed jobs by
-    ~10× wall; the threshold mirrors broadcast-join size gating.
+    Small edge sets (the :func:`fletcher_spark.io.small_input_or_none`
+    gate) are solved with driver-side union-find — one collect of the
+    (already pair-verified, corpus-decimated) edge list beats
+    O(diameter) distributed jobs by ~10× wall.  The edge set is the
+    *verified near-dup pair* set, so at scale the gate still usually
+    fires; the iterative path is the backstop for pair explosions.
     Larger sets run hash-min label propagation with pointer jumping
     (label ← label[label] each round → O(log diameter) rounds):
     distributed rounds, never collecting data (only a 1-row
@@ -109,16 +99,8 @@ def connected_components(
     # paths agree (the join-based path silently dropped them, the old
     # local path raised — ADVICE r2).
     e = edges.select(F.col(src).alias("id1"), F.col(dst).alias("id2")).na.drop()
-    # Size gate and edge collect FUSED into one action (r13, guide
-    # §1.2): ``limit(L+1)`` returns ALL edges whenever there are ≤ L,
-    # so one Arrow collect both answers "is the local path safe?" and
-    # delivers the edge list — the previous count() + toArrow() pair
-    # ran the whole upstream candidate pipeline twice (once to count
-    # into the persist, once to read it back out).  Above the gate the
-    # probe is an early-exiting CollectLimit (a bounded partial pass)
-    # and the distributed path proceeds exactly as before.
-    tbl = e.limit(local_edge_limit + 1).toArrow()
-    if tbl.num_rows <= local_edge_limit:
+    tbl = small_input_or_none(e)
+    if tbl is not None:
         return _local_union_find(tbl, e.sparkSession, e.schema[0].dataType)
     e = e.persist()
     n_edges = e.count()  # also materializes the persist exactly once
@@ -245,9 +227,7 @@ def _local_kcore(tbl, spark, k: int, rounds: int, id_type) -> DataFrame:
     return spark.createDataFrame(pdf, schema)
 
 
-def kcore_peel(
-    e: DataFrame, k: int, rounds: int, local_edge_limit: int = LOCAL_EDGE_LIMIT
-) -> DataFrame:
+def kcore_peel(e: DataFrame, k: int, rounds: int) -> DataFrame:
     """k-core decomposition by iterative peeling: each round removes
     every surviving node whose current degree is below ``k``, then
     recomputes degrees on the induced subgraph (Montresor et al.'s
@@ -274,30 +254,21 @@ def kcore_peel(
     (2·rounds + 1 jobs instead of 3·rounds + 1) with identical output
     (set semantics: chained anti-joins ≡ anti-join of the union).
 
-    Small edge sets (≤ ``local_edge_limit``, the same 4M-edge /
-    ~64 MB-of-int64-pairs gate as :func:`connected_components`) are
-    peeled driver-locally instead (r14, guide §1.2/§5): the
-    distributed rounds cost 2·rounds + 1 eager checkpoint jobs of
-    almost pure scheduling latency when the graph is a bounded
-    aggregate (the nation trade graph is ≤ |nations|² edges), while
-    ONE ``limit(L+1).toArrow()`` probe both answers "is local safe?"
-    and delivers the edges (limit returns all rows when ≤ L).  NULL
-    endpoints or an over-limit count fall through to the distributed
-    rounds unchanged — scale behavior identical.  The two paths are
-    pinned value-equal by tests/test_sketches.py's differential.
+    Small edge sets (the :func:`fletcher_spark.io.small_input_or_none`
+    gate, as in :func:`connected_components`) are peeled driver-locally
+    instead: the distributed rounds cost 2·rounds + 1 eager checkpoint
+    jobs of almost pure scheduling latency when the graph is a bounded
+    aggregate (the nation trade graph is ≤ |nations|² edges), while the
+    gate's one probe job also delivers the edges.  NULL endpoints or an
+    over-limit count fall through to the distributed rounds unchanged.
+    The two paths are pinned value-equal by tests/test_sketches.py's
+    differential.
     """
     if rounds < 1:
         raise ValueError(f"kcore_peel needs rounds >= 1, got {rounds}")
-    if local_edge_limit and local_edge_limit > 0:
-        tbl = e.select("u", "v").limit(local_edge_limit + 1).toArrow()
-        if (
-            tbl.num_rows <= local_edge_limit
-            and not tbl.column(0).null_count
-            and not tbl.column(1).null_count
-        ):
-            return _local_kcore(
-                tbl, e.sparkSession, k, rounds, e.schema["u"].dataType
-            )
+    tbl = small_input_or_none(e.select("u", "v"))
+    if tbl is not None:
+        return _local_kcore(tbl, e.sparkSession, k, rounds, e.schema["u"].dataType)
 
     def degrees(ed: DataFrame) -> DataFrame:
         return (

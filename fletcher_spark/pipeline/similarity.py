@@ -112,10 +112,8 @@ def hyperplane_signs(n_planes: int, dim: int, seed: str = "ann") -> list[list[in
     return mat
 
 
-@lru_cache(maxsize=32)
-def _planes_2d_sql(planes: tuple[tuple[int, ...], ...]) -> str:
-    """SQL text of the 2-level plane-matrix literal, memoized per
-    process (the plane matrices are module constants)."""
+def _planes_2d_sql(planes: list[list[int]]) -> str:
+    """SQL text of the 2-level plane-matrix literal."""
     return (
         "array("
         + ",".join(
@@ -137,19 +135,15 @@ def lsh_bucket_sql(vec_sql: str, planes: list[list[int]]) -> str:
     into its own aggregate sub-tree makes Catalyst analysis
     super-linear in plane count.  The whole per-plane fold goes
     through the parser in one call."""
-    planes_sql = _planes_2d_sql(tuple(tuple(row) for row in planes))
+    planes_sql = _planes_2d_sql(planes)
     return (
         "array_join(transform({lit}, row -> "
         "CASE WHEN ({d}) >= 0 THEN '1' ELSE '0' END), '')"
     ).format(lit=planes_sql, d=dot_sql(vec_sql, "row"))
 
 
-@lru_cache(maxsize=32)
-def _planes_3d_sql(
-    planes: tuple[tuple[int, ...], ...], planes_per_table: int
-) -> str:
-    """SQL text of the 3-level (table-grouped) plane literal, memoized
-    per process — see :func:`_planes_2d_sql`."""
+def _planes_3d_sql(planes: list[list[int]], planes_per_table: int) -> str:
+    """SQL text of the 3-level (table-grouped) plane literal."""
     n_tables = len(planes) // planes_per_table
     return (
         "array("
@@ -211,9 +205,7 @@ def lsh_table_keys_sql(
     (measured; the parse path is ~0.1 s).  The nested per-table /
     per-plane fold is parsed in the same single call.
     """
-    tables_sql = _planes_3d_sql(
-        tuple(tuple(row) for row in planes), planes_per_table
-    )
+    tables_sql = _planes_3d_sql(planes, planes_per_table)
     return (
         "transform({lit}, (tbl, t) -> named_struct("
         "'band', CAST(t AS INT), "

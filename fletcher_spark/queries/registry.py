@@ -103,16 +103,15 @@ CHANGED_ROUND: dict[str, int] = {
     # avgdl one broadcast 1-row aggregate; same integers, same scores
     "search_bm25_topk": 13,
     "search_hybrid_rrf": 13,
-    # r13: the materialize=True cut-point paths (operators/agg.py
-    # _cuts_by_key — operator module, invisible to the hash guard)
-    # twice rewritten this round: first driver-staged stats/offsets
-    # literals, then the gated single-job LOCAL histogram path
-    # (numpy-vectorized, LOCAL_HIST_LIMIT-gated, exact same rank
-    # arithmetic — differential-pinned in tests/test_cuts_driver_stage)
-    "histogram_equidepth_cuts": 14,
-    "events_rfm_segments_cuts": 14,
-    "winsorize_by_source_cuts": 14,
-    "sketch_quantile_bound": 13,
+    # r13: the materialize=True cut-point paths (operators/agg.py —
+    # operator module, invisible to the hash guard) gained the gated
+    # single-job LOCAL histogram path (numpy-vectorized, exact same
+    # rank arithmetic — pinned by the local-vs-lazy differential tests)
+    # r15: their over-gate fallback is now the collected lazy plan
+    "histogram_equidepth_cuts": 15,
+    "events_rfm_segments_cuts": 15,
+    "winsorize_by_source_cuts": 15,
+    "sketch_quantile_bound": 15,
     # r13 wave 10: chatty expression builders rendered as parsed SQL
     # text in OPERATOR modules (invisible to the hash guard) — values
     # identical, pinned by tests/test_vector_sql_twins.py and per-query
@@ -137,8 +136,8 @@ CHANGED_ROUND: dict[str, int] = {
     #   names) — r13 entry above bumped to 14 in place
     # - agg._cuts_local clamps the 2^53 rank-threshold corner to the
     #   distributed fall-through; pipeline/similarity.expr_cached parse
-    #   memo on the plane folds — the cuts-family and knn entries above
-    #   are bumped to 14 in place
+    #   memo on the plane folds — the knn entries above are bumped to
+    #   14 in place (the cuts-family ones too, since bumped to 15)
     # r15 similarity.brute_force_topk rebuilt on the dot_sql/l2_norm_sql
     # text folds (operator module, invisible to the hash guard)
     "ann_cosine_topk": 15,

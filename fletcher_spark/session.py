@@ -12,7 +12,6 @@ timestamp semantics are deterministic across engines.
 from __future__ import annotations
 
 import os
-import weakref
 
 from pyspark.sql import SparkSession
 
@@ -48,16 +47,21 @@ RUNTIME_CONFS = {
 }
 
 
-#: SparkSession objects already conf'd — each conf.set is a py4j
-#: roundtrip (~5 ms for the block), and load_tables calls this on EVERY
-#: query invocation; once per session is enough (nothing in this
-#: library unsets them).  Keyed on the SESSION object, not the
-#: applicationId (ADVICE r13): the confs are per-SparkSession, and a
-#: ``spark.newSession()`` over the same SparkContext keeps the
-#: applicationId — an app-id memo would silently skip it and
-#: timestamp[ns] reads would fail or shift timezone.  WeakSet so a
-#: stopped session's entry does not pin the JVM-side session alive.
-_CONFS_APPLIED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()
+def _session_state(spark: SparkSession) -> dict:
+    """The library's one driver-side memo for ``spark``: a private dict
+    stored on the SparkSession object itself, so its lifetime is
+    exactly the session's.  It holds the conf-applied marker and the
+    ``realpath(sf_dir) → Tables`` map of :func:`fletcher_spark.io.load_tables`.
+
+    Keyed on the session OBJECT, not the applicationId: the confs are
+    per-SparkSession, and ``spark.newSession()`` over the same
+    SparkContext keeps the applicationId while resetting them.  Not a
+    module-level ``WeakKeyDictionary``: a ``Tables`` value holds its
+    session, so the value would keep its own key alive.  On the
+    session object, the session → memo → Tables → session cycle is
+    ordinary garbage once nothing else holds the session (pyspark
+    itself keeps the newest session reachable until another is built)."""
+    return spark.__dict__.setdefault("_fletcher_state", {})
 
 
 def _disable_dataframe_debugging() -> None:
@@ -99,8 +103,11 @@ def _disable_dataframe_debugging() -> None:
 
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply deterministic/performance confs that are legal at runtime.
-    Idempotent and memoized per session object — see ``_CONFS_APPLIED``."""
-    if spark in _CONFS_APPLIED:
+    Idempotent and memoized per session object — each conf.set is a
+    py4j round-trip (~5 ms for the block), and load_tables calls this on
+    every query invocation; see :func:`_session_state`."""
+    state = _session_state(spark)
+    if state.get("confs_applied"):
         return spark
     for k, v in RUNTIME_CONFS.items():
         try:
@@ -108,7 +115,7 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # immutable in this deployment; keep going
     _disable_dataframe_debugging()
-    _CONFS_APPLIED.add(spark)
+    state["confs_applied"] = True
     return spark
 
 

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from fletcher_spark import io
 from fletcher_spark.operators import agg as A
 from fletcher_spark.operators import core as C
 from fletcher_spark.operators import encoding as E
@@ -184,13 +185,32 @@ def test_salted_aggregation_matches_direct(spark):
     assert salted_distinct == direct_distinct
 
 
+def test_small_input_gate(spark, monkeypatch):
+    """``io.small_input_or_none`` returns the whole input at the limit,
+    ``None`` one row over it or with a NULL in any column, and an empty
+    table for zero rows."""
+    monkeypatch.setattr(io, "SMALL_INPUT_ROWS", 3)
+    rows = [(1, "a"), (2, "b"), (3, "c")]
+    df = spark.createDataFrame(rows, "u long, s string")
+    at_limit = io.small_input_or_none(df)
+    assert sorted(zip(*(c.to_pylist() for c in at_limit.columns))) == rows
+    over = spark.createDataFrame(rows + [(4, "d")], df.schema)
+    assert io.small_input_or_none(over) is None
+    for null_row in [(None, "d"), (4, None)]:
+        with_null = spark.createDataFrame(rows[:2] + [null_row], df.schema)
+        assert io.small_input_or_none(with_null) is None
+    empty = io.small_input_or_none(df.limit(0))
+    assert empty.num_rows == 0 and empty.column_names == ["u", "s"]
+
+
 @pytest.mark.parametrize("limit", [4_000_000, 0], ids=["local-uf", "distributed"])
-def test_connected_components_topologies(spark, limit):
+def test_connected_components_topologies(spark, limit, monkeypatch):
     """Chain, star, and singleton-pair components all collapse to the
     min id — the case the corpus oracle can't exercise (its planted
     near-dups are all size-2 pairs).  Both execution paths (driver
     union-find under the size gate; iterative hash-min above it) must
     agree exactly."""
+    monkeypatch.setattr(io, "SMALL_INPUT_ROWS", limit)
     from fletcher_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
@@ -203,7 +223,7 @@ def test_connected_components_topologies(spark, limit):
     )
     got = {
         r["id"]: r["label"]
-        for r in connected_components(edges, local_edge_limit=limit).collect()
+        for r in connected_components(edges).collect()
     }
     assert got == {
         10: 10, 20: 10, 30: 10, 40: 10,
@@ -213,9 +233,10 @@ def test_connected_components_topologies(spark, limit):
 
 
 @pytest.mark.parametrize("limit", [4_000_000, 0], ids=["local-uf", "distributed"])
-def test_connected_components_merge_two_chains(spark, limit):
+def test_connected_components_merge_two_chains(spark, limit, monkeypatch):
     """Two chains bridged by one edge merge into a single component
     (requires >1 propagation round: min must travel the bridge)."""
+    monkeypatch.setattr(io, "SMALL_INPUT_ROWS", limit)
     from fletcher_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
@@ -224,13 +245,13 @@ def test_connected_components_merge_two_chains(spark, limit):
     )
     got = {
         r["id"]: r["label"]
-        for r in connected_components(edges, local_edge_limit=limit).collect()
+        for r in connected_components(edges).collect()
     }
     assert set(got.values()) == {1}
     assert set(got) == {1, 5, 9, 20, 24, 28}
 
 
-def test_connected_components_long_chain_distributed(spark):
+def test_connected_components_long_chain_distributed(spark, monkeypatch):
     """A 30-vertex chain with the local gate forced off: the min label
     must travel the full diameter, crossing the localCheckpoint lineage
     cut every 5 rounds (operators/graph.py).  Plain hash-min moves the
@@ -240,21 +261,23 @@ def test_connected_components_long_chain_distributed(spark):
     max_rounds=15."""
     from fletcher_spark.operators.graph import connected_components
 
+    monkeypatch.setattr(io, "SMALL_INPUT_ROWS", 0)
     n = 30
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], "id1 long, id2 long"
     )
     got = {
         r["id"]: r["label"]
-        for r in connected_components(edges, local_edge_limit=0).collect()
+        for r in connected_components(edges).collect()
     }
     assert got == {i: 1 for i in range(1, n + 1)}
 
 
 @pytest.mark.parametrize("limit", [4_000_000, 0], ids=["local-uf", "distributed"])
-def test_connected_components_null_edges_dropped(spark, limit):
+def test_connected_components_null_edges_dropped(spark, limit, monkeypatch):
     """Null endpoints are filtered before branching, so both paths agree
     on malformed input instead of diverging (ADVICE r2)."""
+    monkeypatch.setattr(io, "SMALL_INPUT_ROWS", limit)
     from fletcher_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
@@ -262,12 +285,12 @@ def test_connected_components_null_edges_dropped(spark, limit):
     )
     got = {
         r["id"]: r["label"]
-        for r in connected_components(edges, local_edge_limit=limit).collect()
+        for r in connected_components(edges).collect()
     }
     assert got == {1: 1, 2: 1, 5: 1}
 
 
-def test_connected_components_random_graph_paths_agree(spark):
+def test_connected_components_random_graph_paths_agree(spark, monkeypatch):
     """Randomized differential check: on a 2000-edge random graph with
     many components, chains, and cycles, the distributed pointer-jump
     path must produce EXACTLY the labels the driver union-find does —
@@ -285,21 +308,23 @@ def test_connected_components_random_graph_paths_agree(spark):
     df = spark.createDataFrame(edges, "id1 long, id2 long")
     local = {
         r["id"]: r["label"]
-        for r in connected_components(df, local_edge_limit=10**9).collect()
+        for r in connected_components(df).collect()
     }
+    monkeypatch.setattr(io, "SMALL_INPUT_ROWS", 0)
     dist = {
         r["id"]: r["label"]
-        for r in connected_components(df, local_edge_limit=0).collect()
+        for r in connected_components(df).collect()
     }
     assert local == dist
     assert len(local) > 100
 
 
 @pytest.mark.parametrize("limit", [4_000_000, 0], ids=["local-uf", "distributed"])
-def test_connected_components_string_ids(spark, limit):
+def test_connected_components_string_ids(spark, limit, monkeypatch):
     """String vertex ids (document fingerprints) work on both paths —
     the Arrow/numpy union-find factorizes ids, it does not assume
     int64."""
+    monkeypatch.setattr(io, "SMALL_INPUT_ROWS", limit)
     from fletcher_spark.operators.graph import connected_components
 
     edges = spark.createDataFrame(
@@ -307,7 +332,7 @@ def test_connected_components_string_ids(spark, limit):
     )
     got = {
         r["id"]: r["label"]
-        for r in connected_components(edges, local_edge_limit=limit).collect()
+        for r in connected_components(edges).collect()
     }
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 

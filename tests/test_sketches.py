@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from fletcher_spark import io
 from fletcher_spark.queries import registry
 
 registry.load_all()
@@ -184,11 +185,12 @@ def test_kcore_peel_triangle_with_tail_converges(spark):
         assert got[n] == (0, 2), got
 
 
-def test_kcore_local_vs_distributed_differential(spark):
+def test_kcore_local_vs_distributed_differential(spark, monkeypatch):
     """The r14 driver-local peel must be value-identical to the
-    distributed rounds on graphs exercising every branch: cascades,
-    exact cores, isolated-by-peeling nodes, multi-edges, self-loops at
-    both parities of k."""
+    distributed rounds (the ``io.SMALL_INPUT_ROWS`` gate forced to 0)
+    on graphs exercising every branch: cascades, exact cores,
+    isolated-by-peeling nodes, multi-edges, self-loops at both parities
+    of k."""
     import random
 
     from fletcher_spark.operators.graph import kcore_peel
@@ -215,8 +217,10 @@ def test_kcore_local_vs_distributed_differential(spark):
                 r["node"]: (r["removed_round"], r["core_deg"])
                 for r in kcore_peel(e, k, 3).collect()
             }
-            dist = {
-                r["node"]: (r["removed_round"], r["core_deg"])
-                for r in kcore_peel(e, k, 3, local_edge_limit=0).collect()
-            }
+            with monkeypatch.context() as m:
+                m.setattr(io, "SMALL_INPUT_ROWS", 0)
+                dist = {
+                    r["node"]: (r["removed_round"], r["core_deg"])
+                    for r in kcore_peel(e, k, 3).collect()
+                }
             assert loc == dist, (k, edges)

@@ -1,38 +1,34 @@
 """Per-query optimization profiler (guide §1: measure first).
 
 Usage:
-    python tools/profile_query.py [--plans DIR] [--runs N] <query> [<query> ...]
+    python tools/profile_query.py [--plans DIR] [--runs N] [--jobs] <query> [<query> ...]
     python tools/profile_query.py --all            # every bench query
-    python tools/profile_query.py --plans plans/r13 --suffix _before <names>
+    python tools/profile_query.py --plans DIR --suffix _before <names>
 
 For each query it reports, on one line per run:
-    wall seconds | #Spark jobs the run triggered | #stages | #tasks
+    wall seconds | construction seconds | #Spark jobs the run triggered
+    | #stages that ran (skipped stages excluded) | #tasks
 and (with --plans) writes the post-construction ``explain("formatted")``
-to ``<DIR>/<query><suffix>.txt``.  Jobs are counted via the local UI
-REST API (http://localhost:<port>/api/v1), which sees every job the
-query ran including eager construction-time jobs (collects inside
-materialize=True operators, localCheckpoints, persists) — exactly the
-overhead a wall-clock-only number hides.
+to ``<DIR>/<query><suffix>.txt``.  ``--jobs`` adds one line per job.
+Each run is one job group, read back from Spark's own status stores
+through ``perfbench/spark_status.StatusReader`` (the benchmark's
+reader), so the count includes eager construction-time jobs (collects
+inside materialize=True operators, localCheckpoints, persists) and
+needs no web UI.
 
-Same session shape as bench.py: local[$SPARK_GRAFT_CPUS], shuffle
-partitions = cpus, runtime confs applied, warm-up probe first.
+Same session shape as bench.py: local[$SPARK_GRAFT_CPUS] (default: the
+CPUs this process may run on), shuffle partitions = cpus, runtime confs
+applied, warm-up probe first.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _rest(port: int, app_id: str, path: str):
-    url = f"http://localhost:{port}/api/v1/applications/{app_id}{path}"
-    with urllib.request.urlopen(url, timeout=10) as r:
-        return json.loads(r.read())
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
@@ -66,12 +62,13 @@ def main() -> None:
             i += 1
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 
     from pyspark.sql import SparkSession
 
-    from fletcher_spark.session import apply_runtime_confs
     from fletcher_spark.queries import registry
+    from fletcher_spark.session import apply_runtime_confs
+    from perfbench.spark_status import StatusReader, drain
 
     registry.load_all()
     if run_all:
@@ -80,14 +77,15 @@ def main() -> None:
     spark = (
         SparkSession.builder.appName("fletcher-spark-profile")
         .master(f"local[{cpus}]")
+        .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.shuffle.partitions", cpus)
         .getOrCreate()
     )
     apply_runtime_confs(spark)
-    spark.sparkContext.setLogLevel("ERROR")
-    app_id = spark.sparkContext.applicationId
-    port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
+    sc = spark.sparkContext
+    sc.setLogLevel("ERROR")
+    reader = StatusReader(spark)
 
     # warm-up: JVM + python worker pool (mirrors bench.py)
     from bench import _box_probe_df
@@ -101,49 +99,41 @@ def main() -> None:
     if plans_dir:
         os.makedirs(plans_dir, exist_ok=True)
 
-    jvm = spark._jvm
-    mode = jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
 
     for name in names:
         fn = registry.QUERIES[name]
         for r in range(runs):
-            jobs_before = {j["jobId"] for j in _rest(port, app_id, "/jobs")}
-            spark.sparkContext.setJobDescription(f"profile:{name}")
+            group = f"profile:{name}:{r}"
+            sc.setJobGroup(group, f"profile:{name}")
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             t_build = time.perf_counter() - t0
             df.write.mode("overwrite").format("noop").save()
             wall = time.perf_counter() - t0
-            spark.sparkContext.setJobDescription(None)
-            jobs = [
-                j
-                for j in _rest(port, app_id, "/jobs")
-                if j["jobId"] not in jobs_before
-            ]
-            n_stages = sum(len(j.get("stageIds", [])) for j in jobs)
-            n_tasks = sum(j.get("numTasks", 0) for j in jobs)
+            drain(spark)
+            jobs = sorted(reader.jobs(group))
+            tot = reader.stage_totals(jobs)
             print(
                 f"{name}  run{r}: wall={wall:.3f}s build={t_build:.3f}s "
-                f"jobs={len(jobs)} stages={n_stages} tasks={n_tasks}",
+                f"jobs={len(jobs)} stages={int(tot['spark.stages'])} "
+                f"tasks={int(tot['spark.tasks'])}",
                 flush=True,
             )
             if verbose:
-                from datetime import datetime
-
-                def _ms(ts: str) -> float:
-                    return datetime.strptime(
-                        ts.replace("GMT", ""), "%Y-%m-%dT%H:%M:%S.%f"
-                    ).timestamp()
-
-                for j in sorted(jobs, key=lambda j: j["jobId"]):
+                store = sc._jsc.sc().statusStore()
+                for j in jobs:
+                    jd = store.job(j)
+                    t_sub, t_end = jd.submissionTime(), jd.completionTime()
                     dur = (
-                        _ms(j["completionTime"]) - _ms(j["submissionTime"])
-                        if "completionTime" in j
+                        (t_end.get().getTime() - t_sub.get().getTime()) / 1e3
+                        if t_sub.isDefined() and t_end.isDefined()
                         else -1
                     )
+                    jt = reader.stage_totals([j])
                     print(
-                        f"    job {j['jobId']}: {dur:6.3f}s tasks={j.get('numTasks', 0):4d} "
-                        f"{(j.get('description') or j.get('name', ''))[:100]}",
+                        f"    job {j}: {dur:6.3f}s stages={int(jt['spark.stages'])} "
+                        f"tasks={int(jt['spark.tasks']):4d} {jd.name()[:100]}",
                         flush=True,
                     )
             if r == runs - 1 and plans_dir:

@@ -246,10 +246,14 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = spread(load_tables(spark, sf_dir)["documents"])
     sh = D.shingle_frame(d, "text", 3)
-    # the signature table fans out to banding and BOTH sides of the
-    # pair join — persist it or the explode+sum sub-DAG runs three times
+    # the persist is a plan boundary: without it the optimizer fuses the
+    # final signature aggregate, its 64-lane sign fold and the 8 chunk
+    # keys into one whole-stage codegen stage past 64 KB, and Spark falls
+    # back to interpreted execution (sf0.1, 4 cores, 4 GiB driver heap:
+    # action 0.6-1.0 s → 13.7-15.3 s, same 241 pairs; a 1 GiB heap runs
+    # out of memory).  count() fills the cache before the pair job.
     bits = D.simhash_df(sh, "doc_id", "shingles").select("doc_id", "sig").persist()
-    bits.count()  # materialize: 3 consumers race the cache otherwise (r13)
+    bits.count()
     banded = bits.select(
         "doc_id", F.expr(D.simhash_chunks_packed_sql("sig", 8)).alias("band_keys")
     )
@@ -332,7 +336,11 @@ def dedup_simhash128_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "sig1", "sig2")
         .persist()
     )
-    bits.count()  # materialize: 3 consumers race the cache otherwise (r13)
+    # plan boundary, as in dedup_simhash_pairs: without it the fused
+    # aggregate + 16-bit chunk-key stage passes 64 KB of generated code
+    # (sf0.1, 4 cores, 4 GiB driver heap: action 0.7-1.0 s → 15.9-18.7 s,
+    # same 233 pairs; a 1 GiB heap runs out of memory)
+    bits.count()
     banded = bits.select(
         "doc_id",
         F.expr(D.simhash_chunks_packed_128_sql("sig1", "sig2", 8)).alias("band_keys"),
@@ -1074,29 +1082,35 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
       keeps.  At t = 4/5 the bound subsumes the SSJoin length filter
       (at pa = pb = 0 it reduces to ``5·min(na,nb) ≥ 4·max(na,nb)``),
       and both are integer-pure.
-    * **distributed rarity ranking** — tid assignment partitions by
-      ``(df, salt)`` (rank within each cell is an ordinary keyed
-      window; the 64-way salt keeps even the hapax df=1 class — about
-      half of a Zipfian vocabulary — off any single task) and adds
-      cumulative offsets from the (df × salt) histogram, so no
-      vocabulary-sized single-task sort exists anywhere.  Any
-      consistent total order yields the same final pairs — rarity
-      order is a candidate-count optimization, and ties within a df
-      class are equally rare — so the DuckDB oracle's simpler global
-      sort stays output-identical.
+    * **rarity order without ids** — each token's document frequency
+      is ``count(*) OVER (PARTITION BY token)``, and each document
+      sorts its own ``(df, token)`` structs and keeps the tokens.  Both
+      steps are keyed shuffles (token, then doc_id), so no
+      vocabulary-sized single-task sort, dense-id assignment or
+      construction-time job exists anywhere.  Any consistent total
+      order yields the same final pairs — rarity order is a
+      candidate-count optimization, and ties within a df class are
+      equally rare — so the DuckDB oracle's ``row_number() OVER (ORDER
+      BY df, token)`` stays output-identical.
 
-    The bigram identity carried through the df aggregate and the tid
-    join is an ``xxhash64`` LONG, never the ~20-byte bigram string:
-    hashing happens inside the per-doc transform (before the
-    array_distinct and the explode), so the two token-keyed shuffles
-    move 8-byte keys (r10 interleaved min-of-3 A/B at the 10× tier:
-    41.6 → 13.1 s under co-tenant load, identical pair output; the
-    same content-addressed-key trade as text_boilerplate_ratio, ~7e-5
-    expected collisions at 50 M distinct bigrams).  The within-class
-    rank orders by the hash — a consistent total order, which per the
+    The bigram identity carried through the df window and the doc-set
+    aggregate is an ``xxhash64`` LONG, never the ~20-byte bigram
+    string: hashing happens inside the per-doc transform (before the
+    array_distinct and the explode), so the token-keyed shuffle moves
+    8-byte keys (r10 interleaved min-of-3 A/B at the 10× tier: 41.6 →
+    13.1 s under co-tenant load, identical pair output; the same
+    content-addressed-key trade as text_boilerplate_ratio, ~7e-5
+    expected collisions at 50 M distinct bigrams).  Ties within a df
+    class order by the hash — a consistent total order, which per the
     paragraph above is all the prefix filter needs.
 
-    Shape: token-hash explode → hash-agg df → distributed rarity rank
+    No persist: the doc-set frame feeds three consumers (both prefix
+    sides and the verify), and Spark plans its doc_id aggregate's
+    exchange once and reuses it for all three (``ReusedExchange`` in
+    the executed plan), so the tokenize subtree runs once per action
+    without a cache entry that outlives the query.
+
+    Shape: token-hash explode → df window → per-doc (df, token) sort
     → prefix posexplode → bucketed pair join with positional bound →
     array-intersect verify on surviving candidates only."""
     d = spread(load_tables(spark, sf_dir)["documents"])
@@ -1115,65 +1129,24 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.array_distinct(F.transform(grams, lambda g: F.xxhash64(g)))
         ).alias("token"),
-    ).persist()  # used twice: document frequency AND the doc-set build
-    # materialize: the doc-set join's tok-side map stage is independent
-    # of the freq->ids chain inside the same job and races the cache (r13)
-    tok.count()
-    freq = tok.groupBy("token").agg(F.count(F.lit(1)).alias("df"))
-    # token -> dense int id in RARITY order (df asc, then arbitrary
-    # within a df class — equal-df tokens are equally rare, so any
-    # within-class order is an equally good prefix order, and the final
-    # pair set is order-independent regardless).  Distributed
-    # assignment: rank within each (df, salt) cell — the salt shards
-    # the window so even the hapax (df=1) class, which is ~half of a
-    # Zipfian vocabulary and would otherwise still funnel through one
-    # window task, splits 64 ways — then add the running count of all
-    # earlier cells.  The cumsum runs over the (df × salt) HISTOGRAM
-    # (≤ 64 rows per distinct df value), never the vocabulary itself.
-    _NSALT = 64
-    salted = freq.withColumn("salt", F.pmod(F.xxhash64("token"), F.lit(_NSALT)))
-    hist = salted.groupBy("df", "salt").agg(F.count(F.lit(1)).alias("cnt"))
-    offs = hist.select(
-        "df",
-        "salt",
-        (
-            F.sum("cnt").over(
-                Window.orderBy("df", "salt").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            )
-        ).alias("off"),
-    ).fillna(0, ["off"])
-    ids = (
-        salted.join(F.broadcast(offs), ["df", "salt"])
-        .select(
-            "token",
-            (
-                F.col("off")
-                + F.row_number().over(
-                    Window.partitionBy("df", "salt").orderBy("token")
-                )
-            ).alias("tid"),
-        )
     )
+    # each document's tokens in rarity order: (df asc, token asc)
     docs = (
-        tok.join(ids, "token")
+        tok.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("token")))
         .groupBy("doc_id")
         .agg(
-            F.array_sort(F.collect_list("tid")).alias("toks"),
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("df", "token"))),
+                lambda s: s["token"],
+            ).alias("toks"),
             F.count(F.lit(1)).alias("n"),
         )
-        .persist()
     )
-    # materialize the doc-set cache before the pair job: it feeds three
-    # branches (both prefix sides + verify), and branches racing an
-    # in-flight cache each recompute the tokenize subtree
-    docs.count()
     plen = (F.col("n") - F.expr("(4 * n + 4) div 5") + 1).cast("int")
     pref = docs.select(
         "doc_id",
         "n",
-        F.posexplode(F.slice(F.col("toks"), F.lit(1), plen)).alias("p", "tid"),
+        F.posexplode(F.slice(F.col("toks"), F.lit(1), plen)).alias("p", "token"),
     )
     # positional filter (PPJoin): a pair meeting at 0-based prefix
     # positions (pa, pb) overlaps at most 1 + min(na-pa-1, nb-pb-1)
@@ -1186,7 +1159,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ub = F.least(F.col("a.n") - F.col("a.p"), F.col("b.n") - F.col("b.p"))
     cand = (
         pref.alias("a")
-        .join(pref.alias("b"), "tid")
+        .join(pref.alias("b"), "token")
         .filter(
             (F.col("a.doc_id") < F.col("b.doc_id"))
             & (9 * ub >= 4 * (F.col("a.n") + F.col("b.n")))
@@ -1205,7 +1178,7 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     db = docs.select(
         F.col("doc_id").alias("id2"), F.col("toks").alias("tb"), F.col("n").alias("nb")
     )
-    # |A∪B| = |A| + |B| - |A∩B|: one sorted-int intersect per pair, no
+    # |A∪B| = |A| + |B| - |A∩B|: one long-array intersect per pair, no
     # union array ever built — the verify stage is the hot loop here
     pairs = (
         cand.join(da, "id1")

@@ -6,6 +6,7 @@ the SimHash chunk pigeonhole guarantee."""
 from __future__ import annotations
 
 import hashlib
+import itertools
 import random
 
 import pytest
@@ -422,3 +423,95 @@ def test_prefix_filter_prunes_and_loses_nothing(spark):
     assert n_cand < all_pairs * 0.2, (
         f"prefix join generated {n_cand} of {all_pairs} pairs — not pruning"
     )
+
+
+def test_prefix_filter_join_is_one_lazy_plan(spark):
+    """Building the prefix-filter join launches no Spark job, and an
+    action on it leaves no cached plan behind: the rarity order is part
+    of the lazy plan, not a materialized side table that outlives the
+    query."""
+    from fletcher_spark.io import load_tables
+    from fletcher_spark.queries import registry
+    from tests.conftest import SF_DIR
+
+    registry.load_all()
+    load_tables(spark, SF_DIR)["documents"]  # warm the table handle
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    group = "prefix-filter-build"
+    sc.setJobGroup(group, "build dedup_prefix_filter_join")
+    try:
+        df = registry.QUERIES["dedup_prefix_filter_join"](spark, SF_DIR)
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert jobs == [], f"construction launched jobs {jobs}"
+    df.write.format("noop").mode("overwrite").save()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_prefix_filter_join_boundary_inputs(spark, tmp_path):
+    """Boundary and hostile documents against a pure-Python all-pairs
+    bigram-set Jaccard ≥ 0.8: NULL, empty and one-word texts (no
+    bigrams, never paired), an exact duplicate, a pair at exactly
+    J = 0.8 (9 and 9 bigrams, 8 shared), one just below (15 of 19), a
+    repeated bigram that must count once, and one bigram ("c0 c1")
+    shared by every document that has any, so df values tie."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fletcher_spark.queries import registry
+
+    def words(stem, n):
+        return " ".join(f"{stem}{i}" for i in range(1, n + 1))
+
+    at_08 = "c0 c1 " + words("e", 7)
+    below = "c0 c1 " + words("f", 14)
+    texts = {
+        1: None,
+        2: "",
+        3: "solo",
+        4: "c0 c1 " + words("d", 5),
+        5: "c0 c1 " + words("d", 5),
+        6: at_08 + " e8",
+        7: at_08 + " x8",
+        8: below + " f15 f16",
+        9: below + " y15 f16",
+        10: "c0 c1 r1 r2 r1 r2 r1 r2",
+        11: "c0 c1 r1 r2",
+        12: "c0 c1 r1 r2 r1",
+    }
+    path = tmp_path / "sf"
+    path.mkdir()
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(list(texts), pa.int64()),
+                "text": pa.array(list(texts.values()), pa.string()),
+            }
+        ),
+        path / "documents.parquet",
+    )
+
+    def bigrams(t):
+        ws = t.split(" ")
+        return {f"{a} {b}" for a, b in zip(ws, ws[1:])}
+
+    sets = {i: bigrams(t) for i, t in texts.items() if t is not None}
+    assert len(sets[6]) == len(sets[7]) == 9 and len(sets[6] & sets[7]) == 8
+    assert len(sets[8] | sets[9]) == 19 and len(sets[8] & sets[9]) == 15
+    want = set()
+    for a, b in itertools.combinations(sorted(i for i in sets if sets[i]), 2):
+        j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+        if j >= 0.8:
+            want.add((a, b, round(j, 4)))
+    assert {(4, 5, 1.0), (6, 7, 0.8), (10, 12, 1.0)} <= want
+    assert not any(p[:2] == (8, 9) for p in want)
+
+    registry.load_all()
+    got = {
+        (r["id1"], r["id2"], r["jaccard"])
+        for r in registry.QUERIES["dedup_prefix_filter_join"](spark, str(path)).collect()
+    }
+    assert got == want, f"missing={want - got} extra={got - want}"
